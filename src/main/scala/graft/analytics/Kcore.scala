@@ -21,20 +21,21 @@ object Kcore {
     *
     * Edges are canonicalized undirected internally (self-loops
     * dropped, both orientations counted once). Rounds are bounded by
-    * `maxRounds` BY CONTRACT and the loop stops early only at the
-    * (survivor-count, degree-sum) fixpoint — extra rounds are no-ops
-    * there, which is exactly what lets the oracle unroll `maxRounds`
-    * SQL rounds unconditionally and still match bit-for-bit (the
-    * bfsHops convergence-vs-unrolled contract). A pathological peel
+    * `maxRounds` BY CONTRACT and the loop stops early only when the
+    * survivor count repeats — survivor sets only shrink, so an equal
+    * count is an equal set and every further round is a no-op, which
+    * is exactly what lets the oracle unroll `maxRounds` SQL rounds
+    * unconditionally and still match bit-for-bit (the bfsHops
+    * convergence-vs-unrolled contract). A pathological peel
     * chain longer than maxRounds leaves a SUPERSET of the k-core on
     * both engines — same rounds, same answer, contract documented.
     *
     * Scale shape: one distinct-canonicalize shuffle up front; each
     * round is one equi-join of the edge list against the (shrinking)
-    * survivor set + one partial-aggregated degree count;
-    * localCheckpoint per round truncates the iterative lineage (the
-    * connectedComponents pattern). O(peel-depth) rounds — real near-
-    * dup/kNN graphs peel in a handful.
+    * survivor set + one partial-aggregated degree count, run under
+    * `Iterate.toFixpoint` and materialized by its count probe in one
+    * job. O(peel-depth) rounds — real near-dup/kNN graphs peel in a
+    * handful.
     */
   def kcoreMembers(edges: DataFrame, srcCol: String, dstCol: String,
                    k: Int, maxRounds: Int = 15): DataFrame = {
@@ -49,28 +50,14 @@ object Kcore {
     val eu = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
       .localCheckpoint(true)
-    var surv = eu.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
     def degrees(s: DataFrame): DataFrame = eu
       .join(s.select(col("id").as("src")), Seq("src"))
       .join(s.select(col("id").as("dst")), Seq("dst"))
       .groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
-    def probe(s: DataFrame): (Long, Long) = {
-      val r = degrees(s).agg(count(lit(1)), coalesce(sum("core_degree"),
-        lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    var prev = probe(surv)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxRounds) {
-      surv = degrees(surv).filter(col("core_degree") >= k)
-        .select("id").localCheckpoint(true)
-      val cur = probe(surv)
-      converged = cur == prev
-      prev = cur
-      i += 1
-    }
+    val surv = Iterate.toFixpoint(
+      eu.select(col("src").as("id")).distinct(), maxRounds)(_.count()) {
+      (s, _) => degrees(s).filter(col("core_degree") >= k).select("id")
+    }.frame
     // at the fixpoint every survivor's degree is >= k by definition;
     // no final filter, so the maxRounds-bounded (non-converged) case
     // emits the SAME honest superset as the oracle's unrolled rounds

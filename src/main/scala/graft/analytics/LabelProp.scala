@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * struct(-count, label) — the rank-1 window row without the window's
   * extra shuffle-and-sort) — both on the label-bearing edge subset,
   * not the corpus; the label frame carries the immutable seed so no
-  * per-iteration node-table join; lineage cut by localCheckpoint
-  * every 2 rounds (the tuned PageRank cadence).
+  * per-iteration node-table join; the rounds run under
+  * `Iterate.rounds` (the PageRank cadence).
   * Direction note: pass a symmetrized edge list for the classic
   * undirected semantics (`symmetrize`).
   */
@@ -58,9 +58,8 @@ object LabelProp {
     // negation never overflows) without the window's extra
     // shuffle-and-sort. Measured: 5 iterations 3.16 s -> ~1.5 s on the
     // sf0.1 kNN graph, bit-identical output.
-    var lab = base.select(col("__v"), col("__seed").as("__lbl"), col("__seed"))
-      .localCheckpoint(eager = true)
-    for (i <- 1 to iters) {
+    val init = base.select(col("__v"), col("__seed").as("__lbl"), col("__seed"))
+    val lab = Iterate.rounds(init, iters) { lab =>
       val majority = e
         .join(lab.filter(col("__lbl").isNotNull), e("src") === lab("__v"))
         .groupBy(col("dst"), col("__lbl").as("__nl"))
@@ -69,13 +68,11 @@ object LabelProp {
         .agg(min(struct((-col("__c")).as("__negc"), col("__nl").as("__l")))
           .as("__m"))
         .select(col("dst"), col("__m.__l").as("__nl"))
-      lab = lab
-        .join(majority, lab("__v") === majority("dst"), "left")
+      lab.join(majority, lab("__v") === majority("dst"), "left")
         .select(col("__v"),
           when(col("__seed").isNotNull, col("__seed"))
             .otherwise(coalesce(col("__nl"), col("__lbl"))).as("__lbl"),
           col("__seed"))
-      if (i % 2 == 0 || i == iters) lab = lab.localCheckpoint(eager = true)
     }
     e.unpersist()
     val out = base.join(lab.select(col("__v"), col("__lbl")), Seq("__v"))
@@ -145,14 +142,15 @@ object LabelProp {
     * for unreachable nodes (emitted, never dropped — unreachable is
     * the interesting answer). Min-propagation rounds (hop' =
     * min(hop, neighbor hop + 1)) converge in diameter rounds, with
-    * the same cheap Σ-based convergence probe as
-    * `connectedComponents`; `maxIters` bounds both the rounds and the
-    * reported distance — a node past that radius reports NULL BY
-    * CONTRACT (matching the oracle's recursion bound).
+    * a cheap Σ-based convergence probe under `Iterate.toFixpoint`;
+    * `maxIters` bounds both the rounds and the reported distance — a
+    * node past that radius reports NULL BY CONTRACT (matching the
+    * oracle's recursion bound).
     *
     * Scale shape: the edge list is checkpointed once; each round is
-    * one equi-join + partial-aggregated min — O(diameter) rounds of
-    * edge-linear work, never a frontier collect.
+    * one equi-join + partial-aggregated min, materialized by its
+    * probe in one job — O(diameter) rounds of edge-linear work, never
+    * a frontier collect.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               sources: DataFrame, idCol: String,
@@ -171,36 +169,23 @@ object LabelProp {
       .union(e.select(col("dst").as("id")))
       .union(seeds.select(col("id")))
       .distinct()
-    // LAZY checkpoints throughout the loop: the probe right after each
-    // round is the materializing action — one job per round instead of
-    // eager-checkpoint + probe (the r18 connectedComponents fuse)
-    var labels = nodes.join(seeds, Seq("id"), "left")
+    val init = nodes.join(seeds, Seq("id"), "left")
       .select(col("id"), col("__h").as("hops"))
-      .localCheckpoint(eager = false)
     def probe(df: DataFrame): (Long, Long) = {
       val r = df.agg(
         sum(when(col("hops").isNull, 1L).otherwise(0L)),
         coalesce(sum(col("hops")), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var prev = probe(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
+    Iterate.toFixpoint(init, maxIters)(probe) { (labels, _) =>
       val neigh = e
         .join(labels.select(col("id").as("src"), col("hops").as("__nh")),
           Seq("src"))
         .filter(col("__nh").isNotNull)
         .select(col("dst").as("id"), (col("__nh") + 1L).as("hops"))
-      labels = labels.union(neigh)
+      labels.union(neigh)
         .groupBy(col("id")).agg(min(col("hops")).as("hops"))
-        .localCheckpoint(eager = false)
-      val cur = probe(labels)
-      converged = cur == prev
-      prev = cur
-      i += 1
-    }
-    labels
+    }.frame
   }
 
   /** Common-neighbor link prediction (Liben-Nowell & Kleinberg 2003 —

@@ -28,10 +28,9 @@ import org.apache.spark.sql.functions._
   * optimization: the old join-deg-then-left-join-nodes loop measured
   * 5.6 s for 10 iterations on the sf0.1 kNN graph, this shape 2.0 s,
   * bit-identical output). The per-iteration shuffle carries one row
-  * per (dst × partition). Lineage is cut with localCheckpoint every
-  * `checkpointEvery` iterations (the connectedComponents pattern —
-  * without it the plan doubles per round). Nodes with no in-edges
-  * keep receiving `base` via their union row — nothing vanishes.
+  * per (dst × partition). The rounds run under `Iterate.rounds`,
+  * which owns the lineage cuts. Nodes with no in-edges keep
+  * receiving `base` via their union row — nothing vanishes.
   */
 object PageRank {
 
@@ -45,9 +44,8 @@ object PageRank {
     * runs over ≤ topN rows.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int = 10, topN: Int = Int.MaxValue,
-               checkpointEvery: Int = 2): DataFrame =
-    pageRankFrom(edges, srcCol, dstCol, None, iters, topN, checkpointEvery)
+               iters: Int = 10, topN: Int = Int.MaxValue): DataFrame =
+    pageRankFrom(edges, srcCol, dstCol, None, iters, topN)
 
   /** Warm-start arm — the daily-refresh shape: iterate from the
     * PREVIOUS snapshot's stored masses instead of uniform. `prevRanks`
@@ -69,12 +67,11 @@ object PageRank {
     */
   def pageRankWarm(edges: DataFrame, srcCol: String, dstCol: String,
                    prevRanks: DataFrame, iters: Int = 3,
-                   topN: Int = Int.MaxValue,
-                   checkpointEvery: Int = 2): DataFrame =
+                   topN: Int = Int.MaxValue): DataFrame =
     pageRankFrom(edges, srcCol, dstCol,
       Some(prevRanks.select(col(srcCol).as("__pv"),
         col("pr_pico").as("__pmass"))),
-      iters, topN, checkpointEvery)
+      iters, topN)
 
   /** Personalized PageRank (random-walk-with-restart) — seed-set
     * corpus expansion, the "find more documents like these" selection
@@ -97,19 +94,16 @@ object PageRank {
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, iters: Int = 10,
-                           topN: Int = Int.MaxValue,
-                           checkpointEvery: Int = 2): DataFrame =
-    pageRankFrom(edges, srcCol, dstCol, None, iters, topN, checkpointEvery,
+                           topN: Int = Int.MaxValue): DataFrame =
+    pageRankFrom(edges, srcCol, dstCol, None, iters, topN,
       Some(seeds.select(col(srcCol).as("__sv")).distinct()))
       .withColumnRenamed("pr_pico", "ppr_pico")
 
   private def pageRankFrom(edges: DataFrame, srcCol: String, dstCol: String,
                            prev: Option[DataFrame], iters: Int, topN: Int,
-                           checkpointEvery: Int,
                            seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1 && iters <= 100, "pageRank: iters must be in [1, 100]")
     require(topN > 0, "pageRank: topN must be positive")
-    require(checkpointEvery >= 1, "pageRank: checkpointEvery must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val e = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
       .persist()
@@ -174,23 +168,12 @@ object PageRank {
     // arithmetic identical to base + Σ contrib, one exchange per
     // iteration instead of a groupBy plus a left join
     val baseRows = nodesB.select(col("__v"), col("__base").as("__c"))
-    var pr = init.localCheckpoint(eager = true)
-    for (i <- 1 to iters) {
-      pr = ed
-        .join(pr, ed("__src") === pr("__v"))
+    val pr = Iterate.rounds(init, iters) { pr =>
+      ed.join(pr, ed("__src") === pr("__v"))
         .select(col("__dst").as("__v"),
           expr("(__mass * 17L) div (20L * __od)").as("__c"))
         .unionByName(baseRows)
         .groupBy("__v").agg(sum(col("__c")).as("__mass"))
-      // checkpoint every K rounds, not every round: each eager
-      // localCheckpoint is a blocking job submission (~the iteration
-      // floor at small N), while the lineage between checkpoints is
-      // only K joins deep — the connectedComponents tradeoff, tuned.
-      // Measured on the sf0.1 kNN graph (5k nodes, 10 iters, warm):
-      // every-1 9.2 s, every-2 8.5 s, every-5 13.5 s (deep lineage
-      // re-analysis beats the jobs saved) — results bit-identical.
-      if (i % checkpointEvery == 0 || i == iters)
-        pr = pr.localCheckpoint(eager = true)
     }
     e.unpersist(); nodes.unpersist(); nodesB.unpersist()
     val cut = pr.select(col("__v").as(srcCol), col("__mass").as("pr_pico"))

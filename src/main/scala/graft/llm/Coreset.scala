@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Iterate
+
 /** k-center greedy coreset selection (Gonzalez farthest-point
   * traversal) over the embedding store — the DIVERSITY counterpart of
   * the PageRank/curriculum centrality signal: where centrality ranks
@@ -37,8 +39,9 @@ import org.apache.spark.sql.functions._
   * corpus map, not i of them). The argmin is TakeOrdered (local top-1
   * per partition + driver merge of one row each), the only driver
   * collect is that single row per round, and lineage is cut with
-  * `localCheckpoint` on the PageRank cadence so round i's plan does
-  * not replay rounds 1..i-1. The quantized corpus is persisted once.
+  * `localCheckpoint` every `Iterate.CheckpointEvery` rounds so round
+  * i's plan does not replay rounds 1..i-1. The quantized corpus is
+  * persisted once.
   *
   * Returns the k selected centers as (idCol, sel_round, far_cos):
   * sel_round = 1-based selection order, far_cos = the center's max
@@ -54,10 +57,8 @@ import org.apache.spark.sql.functions._
   */
 object Coreset {
 
-  def kCenters(df: DataFrame, idCol: String, embCol: String, k: Int,
-               checkpointEvery: Int = 2): DataFrame = {
+  def kCenters(df: DataFrame, idCol: String, embCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 4096, s"kCenters: k must be in [1, 4096], got $k")
-    require(checkpointEvery >= 1, "kCenters: checkpointEvery must be >= 1")
     for (c <- Seq("__vq", "__nsq", "__best", "sel_round", "far_cos")
          if df.columns.contains(c))
       require(false, s"kCenters: '$c' is reserved for internal use — rename it")
@@ -83,7 +84,7 @@ object Coreset {
       var state = vecs.withColumn("__best", centerCos(first))
       var round = 1
       while (round < k) {
-        if (round % checkpointEvery == 0) state = state.localCheckpoint(eager = true)
+        if (round % Iterate.CheckpointEvery == 0) state = state.localCheckpoint(eager = true)
         val next = state
           .filter(!col(idCol).isin(selected.map(_._1).toSeq: _*))
           .sort(col("__best").asc, col(idCol).asc)

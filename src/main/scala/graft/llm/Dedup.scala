@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.analytics.Iterate
+
 /** Deduplication operators for the training-data pipeline layer.
   *
   * Four tiers, cheapest first — the standard large-corpus recipe:
@@ -873,28 +875,6 @@ object Dedup {
         expr("(n_leaked * 1000000L) div n_docs"))
   }
 
-  /** Transitive duplicate clusters: near-dup PAIRS under-merge (A~B,
-    * B~C but A≁C leaves two keep-decisions for one logical document
-    * family), so cluster the pair graph and key each document by its
-    * component's minimum id. Min-label propagation: per round, every
-    * node takes the min of its own and its neighbors' labels — one
-    * keyed shuffle per round, converging in O(component diameter)
-    * rounds. Near-dup components are small and shallow (a boilerplate
-    * family, a mirrored page), so the bound is a handful of rounds;
-    * a web-scale graph with long chains would swap in the
-    * alternating small-star/large-star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce", SoCC'14) — same API.
-    *
-    * The edge list is `localCheckpoint`ed once (it is usually the
-    * output of an expensive similarity join) and each round's labels
-    * are checkpointed too, truncating the iterative lineage — without
-    * that, round k replans rounds 1..k-1.
-    *
-    * Returns (id, cluster_id) for every node of `pairs`; singleton
-    * documents (no pair) are their own cluster by definition and
-    * don't appear. If `maxIter` rounds don't converge, the labels are
-    * returned as-is with a WARN — audit, not silent truncation.
-    */
   /** Incremental connected components — the warm arm of the cluster
     * tier for the daily-crawl shape: yesterday's stored (id,
     * cluster_id) labels stand in for yesterday's WHOLE pair graph
@@ -927,14 +907,36 @@ object Dedup {
       aCol, bCol, maxIter)
   }
 
+  /** Transitive duplicate clusters: near-dup PAIRS under-merge (A~B,
+    * B~C but A≁C leaves two keep-decisions for one logical document
+    * family), so cluster the pair graph and key each document by its
+    * component's minimum id. Min-label propagation: per round, every
+    * node takes the min of its own and its neighbors' labels — one
+    * keyed shuffle per round, converging in O(component diameter)
+    * rounds. Near-dup components are small and shallow (a boilerplate
+    * family, a mirrored page), so the bound is a handful of rounds;
+    * a web-scale graph with long chains would swap in the
+    * alternating small-star/large-star contraction (Kiveris et al.,
+    * "Connected Components in MapReduce", SoCC'14) — same API.
+    *
+    * The edge list is `localCheckpoint`ed once (it is usually the
+    * output of an expensive similarity join), lazily: the probe of
+    * the starting labels is the job that materializes it. The rounds
+    * run under `Iterate.toFixpoint`, which cuts each round's lineage.
+    *
+    * Returns (id, cluster_id) for every node of `pairs`; singleton
+    * documents (no pair) are their own cluster by definition and
+    * don't appear. If `maxIter` rounds don't converge, it throws an
+    * IllegalStateException: cutoff labels are not the components.
+    */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20): DataFrame = {
     val edges = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
       .distinct()
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
+      .localCheckpoint(eager = false)
+    val init = edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
     // Convergence probe: labels only ever DECREASE under min-
     // propagation, so Σ(cluster_id) is strictly monotone until the
@@ -943,12 +945,9 @@ object Dedup {
     // pass 2^63 on a big graph, and ANSI mode would throw.
     def labelSum(df: DataFrame): java.math.BigDecimal = df
       .agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    val fp = Iterate.toFixpoint(init, maxIter)(labelSum) { (labels, i) =>
       // one round = neighbor-min + pointer jump (label := label of
-      // label), fused into a single checkpoint job. The jump halves
+      // label), materialized in one job by the Σ probe. The jump halves
       // the effective path length each round — but on CLUSTER-CHAIN
       // graphs (near-dup clusters bridged in sequence, the media-tier
       // shape) it is structurally blind: every member already points
@@ -991,27 +990,17 @@ object Dedup {
             col("__lsrc").as("cluster_id")))
           .union(labels)
       }).groupBy("id").agg(min("cluster_id").as("cluster_id"))
-      val jumped = neighborMin
+      neighborMin
         .join(neighborMin.select(col("id").as("cluster_id"),
           col("cluster_id").as("__jump")), Seq("cluster_id"), "left")
         .select(col("id"),
           least(col("cluster_id"), coalesce(col("__jump"), col("cluster_id")))
             .as("cluster_id"))
-        // LAZY checkpoint: the Σ probe right below is the materializing
-        // action, so each round submits ONE job instead of an eager
-        // checkpoint job plus the probe job (r18: 6.07 -> 5.11 s on the
-        // pixel pair graph, 0.53 -> 0.49 s on the minhash pairs,
-        // output collect-verified identical)
-        .localCheckpoint(eager = false)
-      val s = labelSum(jumped)
-      labels = jumped
-      converged = s == prevSum
-      prevSum = s
-      i += 1
     }
-    if (!converged) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"connectedComponents: not converged after $maxIter rounds")
-    labels
+    if (!fp.converged) throw new IllegalStateException(
+      s"connectedComponents: labels still changing after ${fp.rounds} " +
+        s"rounds (maxIter = $maxIter) — cutoff labels are not the components")
+    fp.frame
   }
 
   /** Dedup-aware SOFT retention weights — the downweight-instead-of-drop

@@ -392,6 +392,17 @@ class LlmDedupSpec extends SparkSpec {
         s"got ${got.filter(_._2 != 0L).take(5).mkString(", ")}")
   }
 
+  test("connected components: hitting maxIter throws instead of returning cutoff labels") {
+    import spark.implicits._
+    // chain 1-2-3-4 needs more than one round to reach label 1 everywhere
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponents(pairs, "id_a", "id_b", maxIter = 1)
+    }
+    assert(e.getMessage.contains("after 1 rounds") && e.getMessage.contains("maxIter = 1"),
+      e.getMessage)
+  }
+
   test("decontamination: leaked passage flags, clean docs don't, bench side broadcasts") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row

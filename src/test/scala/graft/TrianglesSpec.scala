@@ -96,6 +96,19 @@ class TrianglesSpec extends SparkSpec {
     assert(rep == got)
   }
 
+  test("kcore: a peel chain longer than maxRounds returns exactly the maxRounds superset") {
+    import spark.implicits._
+    import graft.analytics.Kcore
+    // path 0-1-...-6 at k = 2 peels one node from each end per round;
+    // after the 2-round cap {2, 3, 4} survive, reported with their
+    // in-set degrees — the same superset the oracle's 2 unrolled
+    // rounds produce, not the (empty) 2-core
+    val path = (0L until 6L).map(i => (i, i + 1)).toDF("src", "dst")
+    val got = Kcore.kcoreMembers(path, "src", "dst", k = 2, maxRounds = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(2L -> 1L, 3L -> 2L, 4L -> 1L), s"got $got")
+  }
+
   test("contaminationReport: union counts once, per-detector columns split verbatim vs paraphrase, exact rates") {
     import spark.implicits._
     import graft.llm.Dedup

@@ -101,7 +101,7 @@ class XesReaderSpec extends SparkSpec {
 
   test("trace case id appearing AFTER its events still labels every event") {
     // XES allows trace attributes anywhere among the children; the
-    // per-trace buffering must match the DOM parser's semantics
+    // per-trace buffering labels every event of the trace
     val xml =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<log>
